@@ -3,18 +3,25 @@
 Replaces the reference's file-discovery heuristics
 (/root/reference/src/utils/data_loader.py:105-185 picks tables by glob +
 column probe + size) with an explicit registry: every table has a known name
-and location, and reads are plain ``spark.read.parquet`` so Catalyst gets
+and location, and reads are plain parquet scans so Catalyst gets
 projection pruning and predicate pushdown for free
 (/root/reference/src/data/loaders.py:43-118 did both by hand).
+
+Table schemas are resolved once and kept (``read_parquet``): the first read
+of a path infers the schema from its footer — a Spark job — and every later
+read with the same file signature and schema confs pins it, so building a
+query launches no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -88,10 +95,76 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
         sc._hbd_pkg_shipped = True
 
 
-# Footer-type cache keyed on (probe file, mtime): one pyarrow metadata read
-# per events path per process, invalidated if the driver regenerates the
-# data in-process with a different physical type.
-_EVENTS_TS_NANOS: dict[tuple[str, float], bool] = {}
+# Confs that change the schema Spark infers from a parquet footer: the
+# arguments of Spark 4.1's ParquetToSparkSchemaConverter, plus which footers
+# get read (mergeSchema, summary files).  ``nanosAsLong`` is flipped at run
+# time by ``configure_events_read``.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+# One entry per path, replaced when its key changes, so both caches stay
+# bounded by the number of distinct paths read.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_EVENTS_TS_NANOS: dict[str, tuple[tuple, bool]] = {}
+_CACHE_LOCK = threading.Lock()
+
+
+def _file_signature(path: str) -> tuple | None:
+    """``(name, size, st_mtime_ns)`` of the file, or of every file under the
+    directory; None when the path cannot be stat'ed as a local
+    filesystem path (missing, a glob, or a URI such as ``hdfs://``)."""
+    if "://" in path:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (("", st.st_size, st.st_mtime_ns),)
+    sig = []
+    for dirpath, dirs, files in os.walk(path):
+        dirs.sort()
+        for fn in sorted(files):
+            full = os.path.join(dirpath, fn)
+            try:
+                fst = os.stat(full)
+            except OSError:  # removed while walking: the next read re-keys
+                continue
+            sig.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sig)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` whose schema is inferred once per path,
+    file signature and schema confs, then pinned.
+
+    Spark 4.1 launches a job (``mergeSchemasInParallel``) on every inferring
+    read just to re-read an unchanged footer; a read with the schema given
+    launches none.  A path without a signature falls back to the plain read,
+    so a missing path still raises Spark's own AnalysisException."""
+    sig = _file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (sig, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    with _CACHE_LOCK:
+        hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _CACHE_LOCK:
+        _SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 def events_ts_is_nanos(path: str) -> bool:
@@ -100,28 +173,43 @@ def events_ts_is_nanos(path: str) -> bool:
     a normal us/ms timestamp column, which reads natively.  Checked from the
     parquet footer (driver-side, milliseconds) instead of being hard-coded,
     because the two generations of test data disagree on the physical type.
+    Cached under the same file signature as ``read_parquet``; a path that
+    cannot be stat'ed reads as False, so Spark reports the bad path.
     """
-    import glob  # noqa: PLC0415 — driver-side only
+    sig = _file_signature(path)
+    if sig is None:
+        return False
+    with _CACHE_LOCK:
+        hit = _EVENTS_TS_NANOS.get(path)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    import pyarrow.parquet as pq  # noqa: PLC0415 — driver-side only
 
     probe = path
-    if os.path.isdir(probe):
-        parts = sorted(
-            f
-            for f in glob.glob(os.path.join(probe, "**", "*.parquet"), recursive=True)
-            if os.path.isfile(f)
-        )
+    if os.path.isdir(path):
+        parts = [os.path.join(path, rel) for rel, _, _ in sig if rel.endswith(".parquet")]
         if not parts:
             raise FileNotFoundError(
-                f"no .parquet part files found under events path {probe!r}"
+                f"no .parquet part files found under events path {path!r}"
             )
         probe = parts[0]
-    key = (probe, os.path.getmtime(probe))
-    if key not in _EVENTS_TS_NANOS:
-        import pyarrow.parquet as pq  # noqa: PLC0415 — driver-side only
+    nanos = str(pq.read_schema(probe).field("ts").type).startswith("timestamp[ns")
+    with _CACHE_LOCK:
+        _EVENTS_TS_NANOS[path] = (sig, nanos)
+    return nanos
 
-        ts_type = str(pq.read_schema(probe).field("ts").type)
-        _EVENTS_TS_NANOS[key] = ts_type.startswith("timestamp[ns")
-    return _EVENTS_TS_NANOS[key]
+
+def configure_events_read(spark: SparkSession, path: str) -> bool:
+    """Set ``nanosAsLong`` only when the events footer actually carries
+    TIMESTAMP(NANOS); returns whether the nanos path is active."""
+    nanos = events_ts_is_nanos(path)
+    if nanos and spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") != "true":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return nanos
+
+
+def events_path(sf_dir: str) -> str:
+    return f"{sf_dir.rstrip('/')}/events.parquet"
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,16 +218,14 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical timestamp type.  Either way the column lands as
     ``timestamp_ntz`` truncated to microseconds — identical to what DuckDB
     sees — so event-time semantics match the oracle."""
-    path = f"{sf_dir.rstrip('/')}/events.parquet"
-    if events_ts_is_nanos(path):
+    path = events_path(sf_dir)
+    if configure_events_read(spark, path):
         # TIMESTAMP(NANOS): readable only as int64; truncate ns -> us.
-        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path).withColumn(
+        return read_parquet(spark, path).withColumn(
             "ts", F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
         )
     # us/ms timestamp: native read; normalize to ntz for oracle parity.
-    return spark.read.parquet(path).withColumn(
+    return read_parquet(spark, path).withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
     )
 
@@ -157,7 +243,7 @@ class Catalog:
             raise KeyError(f"unknown table {name!r}; known: {TABLES}")
         if name == "events":
             return read_events(self.spark, self.sf_dir)
-        return self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+        return read_parquet(self.spark, f"{self.sf_dir}/{name}.parquet")
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLES:

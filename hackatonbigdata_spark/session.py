@@ -31,7 +31,7 @@ def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # NOTE: no session-wide nanosAsLong pin — catalog.read_events sets it
+        # NOTE: no session-wide nanosAsLong pin — catalog.configure_events_read sets it
         # per-session only when the events footer actually says TIMESTAMP(NANOS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

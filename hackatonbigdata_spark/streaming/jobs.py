@@ -35,7 +35,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
-from hackatonbigdata_spark.catalog import events_ts_is_nanos
+from hackatonbigdata_spark.catalog import (
+    configure_events_read,
+    events_path,
+    read_parquet,
+)
 from hackatonbigdata_spark.functions.core import r4
 from hackatonbigdata_spark.sketch_params import (
     BLOOM_K,
@@ -239,28 +243,18 @@ def _ts_to_ltz(df: DataFrame, nanos: bool) -> DataFrame:
     """Normalize ``ts`` to TIMESTAMP (ltz) for watermarking — session tz is
     pinned UTC so the values equal the batch catalog's timestamp_ntz column.
     ``nanos`` selects between the int64-nanos read (``nanosAsLong``) and a
-    native us/ms timestamp read; the footer decides (catalog.events_ts_is_nanos)."""
+    native us/ms timestamp read; the footer decides (catalog.configure_events_read)."""
     if nanos:
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _configure_events_read(spark: SparkSession, sf_dir: str) -> bool:
-    """Set ``nanosAsLong`` only when the footer actually carries
-    TIMESTAMP(NANOS); returns whether the nanos path is active."""
-    nanos = events_ts_is_nanos(f"{sf_dir.rstrip('/')}/events.parquet")
-    if nanos and spark.conf.get(
-        "spark.sql.legacy.parquet.nanosAsLong", "false"
-    ) != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return nanos
-
-
 def events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """File-source streams need an explicit schema; derive it from the batch
-    footer read once (driver-side, cheap)."""
-    _configure_events_read(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    """File-source streams need an explicit schema: the batch read's, from
+    the catalog's schema cache (one footer job per events file signature
+    per process, none after)."""
+    configure_events_read(spark, events_path(sf_dir))
+    return read_parquet(spark, events_path(sf_dir)).schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,7 +262,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch under availableNow; in production the same code points at a
     landing directory or Kafka source.  Applies the same event-time
     normalization as the batch catalog (dtype-aware, see _ts_to_ltz)."""
-    nanos = _configure_events_read(spark, sf_dir)
+    nanos = configure_events_read(spark, events_path(sf_dir))
     stream = (
         spark.readStream.schema(events_schema(spark, sf_dir))
         # the file stream source needs a directory base path; glob down to
@@ -282,8 +276,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def read_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read with the same column types as ``read_events_stream`` — the
     twin input for batch/stream consistency tests."""
-    nanos = _configure_events_read(spark, sf_dir)
-    return _ts_to_ltz(spark.read.parquet(f"{sf_dir}/events.parquet"), nanos)
+    nanos = configure_events_read(spark, events_path(sf_dir))
+    return _ts_to_ltz(read_parquet(spark, events_path(sf_dir)), nanos)
 
 
 def tumbling_hourly_stream(events: DataFrame) -> DataFrame:

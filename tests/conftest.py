@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -24,6 +25,11 @@ SF_DIR_T2 = "/root/testdata/sf0.01"
 def spark():
     from hackatonbigdata_spark.session import get_spark
 
+    # The session factory's 16g driver heap default is all the RAM of a
+    # 16 GB host: the suite's JVM grows toward it (RSS 15.7 GB) until the
+    # kernel's OOM killer ends it mid-sweep.  The sf0.001 suite passes in a
+    # 4g heap (JVM RSS about 5.5 GB); an explicit setting still wins.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark("hackatonbigdata-tests")
     yield spark
     spark.stop()

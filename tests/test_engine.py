@@ -40,6 +40,13 @@ def test_queries_fail_cleanly_on_missing_sf_dir(spark):
 
     from hackatonbigdata_spark.registry import all_queries
 
-    fn = all_queries()["flagship_weekly_brand_demand"]
-    with pytest.raises(AnalysisException):
-        fn(spark, "/root/testdata/sf_does_not_exist").collect()
+    from hackatonbigdata_spark.streaming import jobs
+
+    bad = f"{SF_DIR}_does_not_exist"
+    # an events-reading query too: the events footer probe must let a path
+    # it cannot stat fall through to Spark's own error
+    for name in ("flagship_weekly_brand_demand", "seq_event_transitions"):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            all_queries()[name](spark, bad).collect()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        jobs.read_events_stream(spark, bad)
