@@ -122,23 +122,26 @@ def io_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert a 10% slice with repriced totals (key = o_orderkey), and
     aggregate the read-back — the oracle computes the expected post-merge
     state directly from the source with a CASE, so equality proves the
-    anti-join + union + staged-swap rewrite updated exactly the keyed rows
-    and lost none.
+    keyed-drop + union + staged-swap rewrite updated exactly the keyed
+    rows and lost none.
 
     Scale: plain parquet has no transactional MERGE, so the pattern is
-    read → anti-join out updated keys → union updates → staged rewrite;
+    read → drop the rows of updated keys → union updates → staged rewrite;
     on Delta/Iceberg the same call is a native MERGE INTO scoped to touched
     partitions."""
-    t = Catalog(spark, sf_dir)
+    orders = Catalog(spark, sf_dir).orders
     target = _scratch(sf_dir, "upsert_target")
-    t.orders.write.mode("overwrite").parquet(target)
+    orders.write.mode("overwrite").parquet(target)
+    # the table was just written from ``orders``: pin that schema on the
+    # read-backs instead of inferring it again (a footer job per read)
     updates = (
-        spark.read.parquet(target)
+        spark.read.schema(orders.schema)
+        .parquet(target)
         .filter(F.col("o_orderkey") % 10 == 0)
         .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
     )
     upsert_parquet(spark, target, updates, ["o_orderkey"])
-    back = spark.read.parquet(target)
+    back = spark.read.schema(orders.schema).parquet(target)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         r4(F.sum("o_totalprice")).alias("sum_price"),

@@ -21,6 +21,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the host's
+    physical memory, capped at 16g, so the JVM never claims all of a small
+    host's RAM (in local mode the driver heap holds every executor too)."""
+    try:
+        host_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "4g"
+    return f"{min(16 * 1024, host_mb // 2)}m"
+
+
 def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -34,7 +45,10 @@ def get_spark(app_name: str = "hackatonbigdata_spark") -> SparkSession:
         # NOTE: no session-wide nanosAsLong pin — catalog.configure_events_read sets it
         # per-session only when the events footer actually says TIMESTAMP(NANOS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # no \r progress bars on stdout: they flood line-capture harnesses
         # (the r5 driver lost bench.py's JSON line to them) and serve nothing

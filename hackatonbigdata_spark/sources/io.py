@@ -9,7 +9,8 @@ reference's TransactionLoader/ProductLoader/StoreLoader,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 class SchemaError(ValueError):
@@ -89,17 +90,23 @@ def export_feature_store(
     the metadata sidecar subsumes the sidecar family).
 
     Returns the metadata dict that was written.  The parquet write is fully
-    parallel; only the tiny sidecar is driver-side."""
+    parallel and is the only action (``n_rows`` is an ``Observation`` on
+    it); only the tiny sidecar is driver-side."""
     import json
     import os
 
-    write_parquet(df, f"{path}/features", partition_by)
+    # the row count rides on the write: a separate df.count() would run the
+    # whole upstream DAG a second time
+    written = Observation()
+    write_parquet(
+        df.observe(written, F.count(F.lit(1)).alias("n")), f"{path}/features", partition_by
+    )
     features = [c for c in df.columns if c not in set(key_cols)]
     meta = {
         "key_columns": key_cols,
         "feature_columns": features,
         "n_features": len(features),
-        "n_rows": df.count(),
+        "n_rows": written.get["n"],
         "schema": {f.name: f.dataType.simpleString() for f in df.schema.fields},
         "partitioned_by": partition_by or [],
     }
@@ -146,24 +153,43 @@ def upsert_parquet(spark, target_path: str, updates: DataFrame, key_cols: list[s
     """Keyed upsert (MERGE) onto a plain-parquet table: update rows whose
     key appears in ``updates``, insert the rest — the feature-store refresh
     operation.  Plain parquet has no transactional MERGE, so the pattern is
-    read -> anti-join out the updated keys -> union the updates -> rewrite
+    read -> drop the rows of updated keys -> union the updates -> rewrite
     through a staging directory and swap (the lazy source read must not be
     overwritten mid-write).  On a table format (Delta/Iceberg) the same
     call becomes a native MERGE INTO; at scale the rewrite is scoped to the
     partitions the update keys touch, not the whole table.
 
+    One pass: the staging write is the only action.  The row counts are
+    ``Observation``s riding on the plan that write runs, so no ``count()``
+    re-executes the target scan or ``updates``, and the staged output is
+    never read back.  The updated keys are dropped by a left join that tags
+    matched rows plus a filter — not a ``left_anti`` join — so the target
+    and matched-row counts are observed ABOVE the join: an observation on
+    the target scan, below the join's shuffle, is dropped from the plan by
+    adaptive execution when the target turns out empty.  Every observation
+    sits on the target read's side of the plan: ``updates`` may belong to
+    another session (a ``foreachBatch`` micro-batch does), and an
+    observation registered there never hears of a write run by
+    ``spark``'s session.
+
     Returns {rows_before, rows_updated, rows_inserted, rows_after}."""
     import os
     import shutil
 
+    seen, after = Observation(), Observation()
+    matched = "__upsert_matched"
+    upd_keys = updates.select(*key_cols).distinct().withColumn(matched, F.lit(True))
     tgt = spark.read.parquet(target_path)
-    upd_keys = updates.select(*key_cols).distinct()
-    rows_before = tgt.count()
-    rows_updated = tgt.join(upd_keys, key_cols, "left_semi").count()
-    merged = tgt.join(upd_keys, key_cols, "left_anti").unionByName(updates)
+    merged = (
+        tgt.join(upd_keys, key_cols, "left")
+        .observe(seen, F.count(F.lit(1)).alias("before"), F.count(matched).alias("updated"))
+        .filter(F.col(matched).isNull())
+        .select(*tgt.columns)
+        .unionByName(updates)
+        .observe(after, F.count(F.lit(1)).alias("after"))
+    )
     staging = target_path.rstrip("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
-    rows_after = spark.read.parquet(staging).count()
     # Crash-safe swap: rename the live table aside BEFORE promoting staging,
     # so an interruption at any point leaves either the old or the new copy
     # on disk (target__old is the recovery artifact) — never neither.
@@ -173,9 +199,10 @@ def upsert_parquet(spark, target_path: str, updates: DataFrame, key_cols: list[s
     os.rename(target_path, old)
     os.rename(staging, target_path)
     shutil.rmtree(old)
+    counts = seen.get | after.get
     return {
-        "rows_before": rows_before,
-        "rows_updated": rows_updated,
-        "rows_inserted": rows_after - rows_before,
-        "rows_after": rows_after,
+        "rows_before": counts["before"],
+        "rows_updated": counts["updated"],
+        "rows_inserted": counts["after"] - counts["before"],
+        "rows_after": counts["after"],
     }

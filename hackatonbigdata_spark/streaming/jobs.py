@@ -599,7 +599,12 @@ def upsert_serving_table_stream(
     foreachBatch + MERGE exactly-once at the table level even though
     foreachBatch itself is at-least-once.  On Delta/Iceberg the body
     becomes a native MERGE INTO; the staged-parquet rewrite here is scoped
-    the same way."""
+    the same way.
+
+    Cost: each micro-batch is persisted and computed once — the emptiness
+    check and the one-pass ``upsert_parquet`` write both read the cached
+    rows, so the stateful aggregation runs once per batch, not once per
+    action."""
     import os  # noqa: PLC0415
 
     from hackatonbigdata_spark.sources.io import upsert_parquet  # noqa: PLC0415
@@ -607,14 +612,23 @@ def upsert_serving_table_stream(
     agg = tumbling_hourly_stream(read_events_stream(spark, sf_dir))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if os.path.isdir(target_path):
-            upsert_parquet(
-                spark, target_path, batch_df, ["window_start", "event_type"]
-            )
-        else:
-            batch_df.write.mode("overwrite").parquet(target_path)
+        # The micro-batch is a view over the stateful aggregation: every
+        # action on it would run that aggregation again.  Cached, the
+        # emptiness probe and the merge write read the same computed rows.
+        # The probe runs on every batch, no-data ones included, so the
+        # state store commits each batch.
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            if os.path.isdir(target_path):
+                upsert_parquet(
+                    spark, target_path, batch_df, ["window_start", "event_type"]
+                )
+            else:
+                batch_df.write.mode("overwrite").parquet(target_path)
+        finally:
+            batch_df.unpersist()
 
     (
         agg.writeStream.foreachBatch(merge_batch)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import threading
+import uuid
 
 import pytest
 
@@ -25,14 +26,27 @@ SF_DIR_T2 = "/root/testdata/sf0.01"
 def spark():
     from hackatonbigdata_spark.session import get_spark
 
-    # The session factory's 16g driver heap default is all the RAM of a
-    # 16 GB host: the suite's JVM grows toward it (RSS 15.7 GB) until the
-    # kernel's OOM killer ends it mid-sweep.  The sf0.001 suite passes in a
-    # 4g heap (JVM RSS about 5.5 GB); an explicit setting still wins.
+    # With a 16g driver heap the suite's JVM grew to RSS 15.7 GB on a
+    # 16 GB host until the kernel's OOM killer ended it mid-sweep.  The
+    # sf0.001 suite passes in a 4g heap (JVM RSS about 5.5 GB), below the
+    # factory's half-of-host-RAM default; an explicit setting still wins.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark("hackatonbigdata-tests")
     yield spark
     spark.stop()
+
+
+def jobs_launched(spark, fn):
+    """(number of Spark jobs ``fn()`` launched from this thread, its result)."""
+    sc = spark.sparkContext
+    group = f"jobs-launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 # --- shared query-DataFrame cache (r15 suite-runtime fix) -------------------

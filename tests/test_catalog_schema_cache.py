@@ -8,7 +8,6 @@ from __future__ import annotations
 import datetime as dt
 import shutil
 import sys
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -25,22 +24,9 @@ from hackatonbigdata_spark.catalog import (
 from hackatonbigdata_spark.registry import all_queries
 from hackatonbigdata_spark.streaming import jobs
 from perfbench.workloads import WORKLOADS
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_launched
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-def jobs_launched(spark, fn):
-    """(number of Spark jobs ``fn()`` launched, its result)."""
-    sc = spark.sparkContext
-    group = f"schema-cache-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 @pytest.fixture

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hackatonbigdata_spark.sources.io import SchemaError, load_typed, write_submission
+from tests.conftest import jobs_launched
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -118,3 +119,131 @@ def test_upsert_parquet_updates_and_inserts(spark, tmp_path):
     assert stats["rows_updated"] == base.filter("p_partkey <= 10").count()
     assert back.filter("p_partkey <= 10").select(F.min("p_retailprice"), F.max("p_retailprice")).first() == (1.0, 1.0)
     assert back.filter("p_partkey = 10000001").count() == 1
+
+
+# --- upsert_parquet: stats against explicit semi/anti-join counts ----------
+
+KV = "k long, v string"
+
+
+def _expected_upsert_stats(tgt, updates, key_cols):
+    """The MERGE's stats the slow way: one count per join side."""
+    keys = updates.select(*key_cols).distinct()
+    before = tgt.count()
+    updated = tgt.join(keys, key_cols, "left_semi").count()
+    kept = tgt.join(keys, key_cols, "left_anti").count()
+    assert updated + kept == before
+    after = kept + updates.count()
+    return {
+        "rows_before": before,
+        "rows_updated": updated,
+        "rows_inserted": after - before,
+        "rows_after": after,
+    }
+
+
+@pytest.mark.parametrize(
+    "target_rows, update_rows",
+    [
+        pytest.param(
+            [(1, "a"), (1, "b"), (2, "c"), (3, "d")],
+            [(1, "x"), (4, "y")],
+            id="duplicate-keys-in-target",
+        ),
+        pytest.param(
+            [(None, "n"), (1, "a"), (2, "b")],
+            [(1, "x"), (5, "y")],
+            id="null-key-in-target-is-kept",
+        ),
+        pytest.param(
+            [(1, "a"), (2, "b")],
+            [(1, "x"), (1, "y"), (5, "z")],
+            id="duplicate-keys-in-updates",
+        ),
+        pytest.param(
+            [(1, "a"), (2, "b")],
+            [(3, "x"), (4, "y")],
+            id="pure-insert",
+        ),
+        pytest.param(
+            [(1, "a"), (2, "b"), (3, "c")],
+            [(1, "x"), (3, "y")],
+            id="pure-update",
+        ),
+        pytest.param([], [(1, "x")], id="empty-target"),
+        pytest.param([(1, "a"), (2, "b")], [], id="empty-updates"),
+    ],
+)
+def test_upsert_parquet_stats_match_join_counts(spark, tmp_path, target_rows, update_rows):
+    """The returned stats equal explicit semi-/anti-join counts, and the
+    table holds exactly the kept target rows plus every update row."""
+    from hackatonbigdata_spark.sources.io import upsert_parquet
+
+    target = str(tmp_path / "t")
+    spark.createDataFrame(target_rows, KV).write.parquet(target)
+    updates = spark.createDataFrame(update_rows, KV)
+    expect = _expected_upsert_stats(spark.read.parquet(target), updates, ["k"])
+    upd_keys = {k for k, _ in update_rows}
+    expect_rows = sorted(
+        [r for r in target_rows if r[0] not in upd_keys or r[0] is None] + update_rows,
+        key=repr,
+    )
+
+    stats = upsert_parquet(spark, target, updates, ["k"])
+
+    assert stats == expect
+    got = sorted((tuple(r) for r in spark.read.parquet(target).collect()), key=repr)
+    assert got == expect_rows
+    assert len(got) == stats["rows_after"]
+
+
+def test_upsert_parquet_accepts_updates_from_another_session(spark, tmp_path):
+    """A ``foreachBatch`` micro-batch belongs to a cloned session.  Stats
+    observed on that session's plan would never be reported by a write run
+    in ``spark``'s session and the call would wait forever; run it in a
+    daemon thread so such a regression fails here instead of hanging."""
+    import threading
+
+    from hackatonbigdata_spark.sources.io import upsert_parquet
+
+    target = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], KV).write.parquet(target)
+    updates = spark.newSession().createDataFrame([(2, "x"), (3, "y")], KV)
+    out = {}
+
+    def run():
+        try:
+            out["stats"] = upsert_parquet(spark, target, updates, ["k"])
+        except Exception as exc:  # re-raised in the test thread
+            out["error"] = exc
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(timeout=120)
+    assert not th.is_alive(), "upsert_parquet hung on updates from another session"
+    if "error" in out:
+        raise out["error"]
+    assert out["stats"] == {
+        "rows_before": 2, "rows_updated": 1, "rows_inserted": 1, "rows_after": 3,
+    }
+    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) == [
+        (1, "a"), (2, "x"), (3, "y"),
+    ]
+
+
+def test_upsert_parquet_is_one_pass(spark, tmp_path):
+    """Regression guard on the MERGE's cost: the stats ride on the staging
+    write, so an upsert onto a small table is the target's schema read plus
+    the write's jobs — no count() actions and no staging read-back (those
+    were 8 more jobs)."""
+    from hackatonbigdata_spark.sources.io import upsert_parquet
+
+    target = str(tmp_path / "t")
+    spark.range(200).selectExpr("CAST(id AS STRING) AS v", "id AS k").write.parquet(target)
+    updates = spark.range(150, 250).selectExpr("id AS k", "'new' AS v")
+    n_jobs, stats = jobs_launched(spark, lambda: upsert_parquet(spark, target, updates, ["k"]))
+    assert stats == {
+        "rows_before": 200, "rows_updated": 50, "rows_inserted": 50, "rows_after": 250,
+    }
+    assert n_jobs <= 5, f"upsert launched {n_jobs} Spark jobs"
+    assert spark.read.parquet(target).columns == ["v", "k"], "table column order changed"

@@ -217,6 +217,38 @@ def test_upsert_serving_table_stream_converges_to_batch(spark, events_batch, tmp
     )
 
 
+def _marker_job_id(spark) -> int:
+    """Id of a one-task marker job.  Job ids are sequential across the
+    application, so the gap between two markers counts every job launched
+    in between, from any thread (a stream runs its batches, and the
+    ``foreachBatch`` body, in its own thread and job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    (jid,) = sc.statusTracker().getJobIdsForGroup(group)
+    return jid
+
+
+def test_upsert_serving_table_stream_computes_each_batch_once(spark, tmp_path):
+    """Regression guard on the sink's cost: each micro-batch is persisted,
+    so its emptiness check and the one-pass MERGE write read the cached
+    rows instead of re-running the stateful aggregation per action (about
+    15 jobs per call when every action re-ran it and the MERGE counted its
+    rows with count() actions)."""
+    target = str(tmp_path / "serving")
+    jobs.upsert_serving_table_stream(spark, SF_DIR, target)  # creates the table
+    first = _marker_job_id(spark)
+    jobs.upsert_serving_table_stream(spark, SF_DIR, target)  # MERGEs into it
+    n_jobs = _marker_job_id(spark) - first - 1
+    assert n_jobs <= 8, f"serving-table MERGE call launched {n_jobs} Spark jobs"
+
+
 def test_interval_join_stream_matches_batch(spark, events_stream, events_batch):
     """Stream-stream interval join (append mode): the emitted (view,
     purchase) pairs must equal the batch interval join over the same files
